@@ -381,7 +381,6 @@ def minhash_lsh_pairs_exact(
     with _MINHASH_VIEW_LOCK:
         _MINHASH_VIEW_SEQ += 1
         view = f"__minhash_exact_input_{_MINHASH_VIEW_SEQ}"
-    df.createOrReplaceTempView(view)
     gets = ", ".join(f"get(_w, i + {j})" for j in range(k))
     # Signature minima as a CODEGEN'D hash aggregate over the exploded
     # shingle hashes (r12): transform()/array_min() are HigherOrderFunction
@@ -443,11 +442,12 @@ def minhash_lsh_pairs_exact(
     # straggler task is the job's wall-clock; there, and only there,
     # enable it explicitly. minhash_lsh_pairs_bounded remains the
     # documented contract for extreme duplication.
-    probe_min = int(
-        spark.conf.get("spark.graft.minhash.skewProbeMinBytes", str(1 << 60))
-    )
-    est = _estimated_bytes(df)
-    try:
+    df.createOrReplaceTempView(view)
+    try:  # from here on, every exit (a bad probe conf too) drops the view
+        probe_min = int(
+            spark.conf.get("spark.graft.minhash.skewProbeMinBytes", str(1 << 60))
+        )
+        est = _estimated_bytes(df)
         if est is not None and est >= probe_min:
             return _minhash_exact_skew_safe(
                 spark, base_cte, min_exprs, band_items, threshold
@@ -847,20 +847,11 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-# SQL-string twins of _dot/_norm (§1.2): every higher-order lambda built
+# Vector math as SQL strings (§1.2): every higher-order lambda built
 # through the PySpark Column API costs a fan of py4j round-trips plus an
 # eager re-analysis at plan-construction time — measured 6.4-9.7 s of pure
 # build in llm_embedding_near_dup and ~1.9 s in llm_ann_lsh (r13 phase
-# profile). The parsed trees are identical (0.0D is the same double
-# literal as F.lit(0.0)), so results are bit-identical.
+# profile), so these helpers emit the same parsed trees as one string each.
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -880,10 +871,6 @@ def _l2dist_sql(a: str, b: str) -> str:
 
 def _cos_sim_sql(a: str, b: str, digits: int = 6) -> str:
     return f"round(({_dot_sql(a, b)}) / (({_norm_sql(a)}) * ({_norm_sql(b)})), {digits})"
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("vec_norm", _norm(F.col(vec_col).cast("array<double>")))
 
 
 def cosine_topk_bruteforce(

@@ -14,9 +14,12 @@ cost model, planner/RuntimeFilterGenerator.java runtime filters):
   while facts never do — the static threshold compares COMPRESSED parquet
   bytes (see inline note), so 64 MB would broadcast multi-million-row
   facts; AQE re-promotes provably-small shuffle sides at runtime.
-- shuffle.partitions 32 locally; on a 1000-executor cluster this single
-  knob (or AQE coalescing from an intentionally-high initial count) is the
-  one to raise — nothing else in the engine hard-codes parallelism.
+- shuffle.partitions sized from the input: register_tables sets 1 below
+  TINY_INPUT_BYTES (the reference's single-node plan, Planner.java:91-108)
+  and DEFAULT_SHUFFLE_PARTITIONS (32) above it. On a 1000-executor
+  cluster DEFAULT_SHUFFLE_PARTITIONS (or AQE coalescing from an
+  intentionally-high initial count) is the knob to raise; the expensive
+  LLM exchanges carry their own data-scaled counts.
 - Timezone UTC + ANSI off: Impala TIMESTAMP is timezone-less and Impala
   arithmetic does not throw on overflow (SURVEY §7 hard parts).
 """
@@ -49,6 +52,10 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+#: session shuffle-partition default above TINY_INPUT_BYTES (the 100 TB
+#: posture; see get_spark)
+DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
 def get_spark(app_name: str = "impala_spark", master: str | None = None) -> SparkSession:
@@ -103,7 +110,7 @@ def get_spark(app_name: str = "impala_spark", master: str | None = None) -> Spar
         # threshold still promotes provably-small shuffle sides using
         # observed (accurate) sizes.
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         # 32 MB, not Spark's 128 MB default: FilePartition PACKS files up
         # to maxPartitionBytes per split, and the sf10 fixtures are 32
         # files x ~24 MB per fact table — at 128 MB the whole 732 MB
@@ -356,6 +363,27 @@ _DIR_BYTES: dict[str, int] = {}
 #: depends on the constant.
 SMALL_QUERY_BYTES = 8 << 30
 
+#: Single-partition threshold, tighter than SMALL_QUERY_BYTES (the
+#: bloom/AQE gate): below it a shuffle runs as ONE task — Impala's
+#: single-node plan. The win is the skipped RangePartitioner sampling
+#: job plus tiny-task scheduling, worth ~0.1 s per exchange; above ~64
+#: MB of input the lost reduce parallelism costs more (sf1's 6M-row
+#: joins want cores). Applied to the session by register_tables, to
+#: stats_session clones, and to relational posture_session clones.
+TINY_INPUT_BYTES = 64 << 20
+
+
+#: session token -> largest input (bytes) register_tables has seen on it
+_WIDEST_INPUT: dict[str, int] = {}
+
+
+def _shuffle_partitions_for(input_bytes: int) -> str:
+    """spark.sql.shuffle.partitions for statements over `input_bytes` of
+    input: "1" below TINY_INPUT_BYTES, DEFAULT_SHUFFLE_PARTITIONS above."""
+    if input_bytes < TINY_INPUT_BYTES:
+        return "1"
+    return DEFAULT_SHUFFLE_PARTITIONS
+
 
 def _dir_total_bytes(sf_dir: str) -> int:
     if sf_dir not in _DIR_BYTES:
@@ -385,10 +413,22 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
     pruning + filter pushdown + column pruning on these for free.
     Idempotent and cached per (session, sf_dir); a different sf_dir in the
     same session re-registers the views (last one wins, like USE db).
-    Also applies the small-query fast path (see SMALL_QUERY_BYTES).
+    Also applies the small-query fast path (see SMALL_QUERY_BYTES) and
+    sizes the session's shuffle partitions (see TINY_INPUT_BYTES) from
+    the LARGEST input ever registered on it, never sized back down.
+    Spark reads the conf when a query RUNS, so a DataFrame built over a
+    large input and collected after a tiny directory was registered
+    still runs wide. The width is per session, not per DataFrame:
+    direct llm_ops calls over a corpus outside every registered
+    directory take it as they find it (one partition in a session that
+    only saw tiny inputs); set spark.sql.shuffle.partitions after this
+    call for such inputs. With SPARK_GRAFT_DISABLE_SMALL_POSTURE set the
+    caller owns shuffle parallelism and the width is left alone.
     """
+    tok = _session_token(spark)
     try:
-        small = _dir_total_bytes(sf_dir) < SMALL_QUERY_BYTES
+        nbytes = _dir_total_bytes(sf_dir)
+        small = nbytes < SMALL_QUERY_BYTES
         # posture_session clones own their bloom/AQE conf (pinned at
         # creation, keyed by byte class) — mutating it here would
         # reintroduce the build-vs-execution conf race the clone exists
@@ -410,15 +450,23 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
         # gating idea as the reference's small-query fast path
         # (Planner.java:91-108: single-node, runtime filters off).
         spark.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
-        # shuffle.partitions is NOT sized down here: it is per-query-
-        # FAMILY, not global (r6's global-8 experiment regressed the
-        # compute-parallel LLM ops; r7 verdict task #1 says gate it).
-        # apply_query_posture() below sets 1 for relational statements
-        # under the small path and the session default for everything
-        # else.
+        # Tiny inputs also get ONE shuffle partition (TINY_INPUT_BYTES):
+        # with AQE off nothing coalesces a KB-sized exchange, and 32
+        # reduce tasks per shuffle dominated engine SQL, DML and direct
+        # llm_ops calls. The expensive LLM exchanges are unaffected —
+        # they carry explicit data-scaled counts (llm_ops.
+        # _compute_partitions) — and the registry's compute-parallel
+        # posture_session clones keep DEFAULT_SHUFFLE_PARTITIONS. Sized
+        # from the widest input seen (see docstring), so registering a
+        # tiny directory cannot narrow a pending large query to 1 task.
+        widest = max(_WIDEST_INPUT.get(tok, 0), nbytes)
+        _WIDEST_INPUT[tok] = widest
+        if not os.environ.get("SPARK_GRAFT_DISABLE_SMALL_POSTURE"):
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", _shuffle_partitions_for(widest)
+            )
     except Exception:
         pass  # static-conf build: keep whatever the session has
-    tok = _session_token(spark)
     key = (tok, sf_dir)
     cached = _REGISTERED.get(key)
     if cached is not None:
@@ -726,8 +774,10 @@ def stats_session(spark: SparkSession, sf_dir: str) -> SparkSession:
     """Session clone whose conf is the stats-backed-planning posture:
     CBO + join reorder on (they now have catalog stats to cost with),
     the stats broadcast budget, LTZ literals (see register_stats_table),
-    and the same small-input bloom/AQE gate as register_tables. Pinned
-    at creation like posture_session clones."""
+    and the same small-input bloom/AQE gate and size-derived shuffle
+    partition count as register_tables, so statements routed here after
+    COMPUTE STATS plan alike. Pinned at creation like posture_session
+    clones."""
     key = (_session_token(spark), sf_dir)
     child = _STATS_SESSIONS.get(key)
     if child is None:
@@ -750,14 +800,15 @@ def stats_session(spark: SparkSession, sf_dir: str) -> SparkSession:
             "false" if small else "true",
         )
         child.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
+        child.conf.set(
+            "spark.sql.shuffle.partitions",
+            _shuffle_partitions_for(_dir_total_bytes(sf_dir)),
+        )
         child._impala_spark_pinned = True
         child.catalog.setCurrentDatabase(stats_db_name(sf_dir))
         _STATS_SESSIONS[key] = child
     return child
 
-
-#: session shuffle-partition default (the 100 TB posture; see get_spark)
-DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 #: (parent session token, posture key) -> cloned session with pinned conf
 _FAMILY_SESSIONS: dict[tuple[str, str], SparkSession] = {}
@@ -781,9 +832,11 @@ def posture_session(
     just to pick sort boundaries.
 
     Compute-parallel families (LLM ops: per-row hashing/shingling;
-    streaming) keep DEFAULT_SHUFFLE_PARTITIONS — rows, not bytes,
-    predict their CPU need (r6's global-8 regression; gated per-family
-    per the r7 verdict).
+    streaming) keep DEFAULT_SHUFFLE_PARTITIONS. That split predates the
+    session-wide posture of register_tables; since then direct llm_ops
+    calls on a one-partition session measured faster (perfbench
+    llm_dedup), so whether this family can merge into the session
+    posture is an open ROADMAP item, to be measured with bench.py.
 
     WHY A CLONED SESSION (r8 verdict what's-wrong #4 / ADVICE): the
     r6-r8 implementation SET session-global shuffle.partitions at
@@ -801,13 +854,10 @@ def posture_session(
     """
     if os.environ.get("SPARK_GRAFT_DISABLE_SMALL_POSTURE"):
         return spark  # caller owns shuffle parallelism (determinism tests)
-    # tighter than SMALL_QUERY_BYTES (the bloom/AQE gate): the
-    # single-partition win is the skipped sampling job + tiny-task
-    # scheduling, worth ~0.1s — above ~64 MB of input the lost
-    # reduce parallelism costs more (sf1's 6M-row joins want cores)
-    tiny = _dir_total_bytes(sf_dir) < (64 << 20)
     parts = (
-        "1" if (tiny and family == "relational") else DEFAULT_SHUFFLE_PARTITIONS
+        _shuffle_partitions_for(_dir_total_bytes(sf_dir))
+        if family == "relational"
+        else DEFAULT_SHUFFLE_PARTITIONS
     )
     # the bloom/AQE byte class is part of the key (r9 ADVICE): every
     # posture conf is pinned at clone CREATION and never mutated after,

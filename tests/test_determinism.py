@@ -35,6 +35,11 @@ def test_result_invariant_under_partitioning(spark, sf_dir, name):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             _PLAN_CACHE.clear()  # force a fresh plan under the new setting
             df = SPARK_QUERIES[name](spark, sf_dir)
+            # the width under test must survive the query's own
+            # register_tables call, or both arms run alike
+            assert (
+                df.sparkSession.conf.get("spark.sql.shuffle.partitions") == parts
+            )
             results.append(sorted(map(tuple, df.collect())))
         assert results[0] == results[1], f"{name} varies with partition count"
         assert len(results[0]) > 0
@@ -45,15 +50,16 @@ def test_result_invariant_under_partitioning(spark, sf_dir, name):
 
 
 def test_small_query_posture_per_family(spark, sf_dir):
-    """The reference-style small-query fast path is per-FAMILY: below
-    SMALL_QUERY_BYTES, relational statements plan with ONE shuffle
-    partition (no RangePartitioner sampling job, Impala's single-node
-    shape) while compute-parallel DataFrame ops keep the session
-    default (r6: global narrowing regressed the LLM ops)."""
+    """The registry's posture is per-FAMILY: below TINY_INPUT_BYTES,
+    relational statements plan with ONE shuffle partition (no
+    RangePartitioner sampling job, Impala's single-node shape) while
+    compute-parallel registry ops keep DEFAULT_SHUFFLE_PARTITIONS on
+    their own pinned clone, whatever the parent session holds."""
     _PLAN_CACHE.clear()
     # the posture rides each DataFrame's own conf-pinned session (r9:
     # build-time session-global mutation raced interleaved families);
     # the parent session's conf is never touched
+    before = spark.conf.get("spark.sql.shuffle.partitions")
     rel_df = SPARK_QUERIES["pricing_summary"](spark, sf_dir)
     assert (
         rel_df.sparkSession.conf.get("spark.sql.shuffle.partitions") == "1"
@@ -62,7 +68,7 @@ def test_small_query_posture_per_family(spark, sf_dir):
     assert (
         par_df.sparkSession.conf.get("spark.sql.shuffle.partitions") == "32"
     )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # and the single-partition relational plan executes correctly
     _PLAN_CACHE.clear()
     rows = SPARK_QUERIES["pricing_summary"](spark, sf_dir).collect()

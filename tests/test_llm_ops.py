@@ -1100,3 +1100,24 @@ def test_minhash_exact_concurrent_builds_isolated(spark):
         if t.name.startswith("__minhash_exact_input")
     ]
     assert leaked == []
+
+
+def test_minhash_exact_bad_probe_conf_drops_view(spark):
+    """A malformed skew-probe conf fails the call, and the per-call temp
+    view registered before the conf is read is still dropped."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(1, "aa bb cc dd ee ff gg hh")], "doc_id: long, text: string"
+    )
+    spark.conf.set("spark.graft.minhash.skewProbeMinBytes", "abc")
+    try:
+        with pytest.raises(ValueError):
+            llm_ops.minhash_lsh_pairs_exact(df, threshold=0.5)
+    finally:
+        spark.conf.unset("spark.graft.minhash.skewProbeMinBytes")
+    leaked = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("__minhash_exact_input")
+    ]
+    assert leaked == []

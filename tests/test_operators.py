@@ -96,7 +96,9 @@ def test_exchange_partition_counts(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     assert ops.exchange(o, "UNPARTITIONED").rdd.getNumPartitions() == 1
     # AQE may coalesce tiny shuffles at runtime; assert the plan hash-partitions.
-    hashed = ops.exchange(o, "HASH_PARTITIONED", "o_custkey")
+    # An explicit count: over one partition (the tiny-input session
+    # posture) repartition(col) plans as SinglePartition instead.
+    hashed = ops.exchange(o, "HASH_PARTITIONED", "o_custkey", n=4)
     plan = hashed._jdf.queryExecution().toString()
     assert "hashpartitioning(o_custkey" in plan
     assert hashed.rdd.getNumPartitions() >= 1

@@ -31,6 +31,7 @@ def spark():
 
 
 def test_family_sessions_pin_conf_independently(spark):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
     rel = posture_session(spark, SF_TINY, "relational")
     par = posture_session(spark, SF_TINY, "parallel")
     assert rel is not par
@@ -40,7 +41,7 @@ def test_family_sessions_pin_conf_independently(spark):
     assert posture_session(spark, SF_TINY, "relational") is rel
     assert posture_session(spark, SF_TINY, "parallel") is par
     # the parent's conf is never mutated
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_interleaved_families_do_not_cross_contaminate(spark):
@@ -109,4 +110,80 @@ def test_broadcast_hint_scale_gate(spark):
         ]
     finally:
         S._DIR_BYTES.pop(small_dir, None)
+        S._DIR_BYTES.pop(big_dir, None)
+
+
+def test_engine_sql_runs_tiny_order_by_as_one_job(spark):
+    """register_tables gives the session itself the single-partition
+    posture below TINY_INPUT_BYTES, so ImpalaEngine.sql() SELECTs plan
+    like registry relational statements: an ORDER BY over a tiny input
+    runs in ONE job (no RangePartitioner sampling job) whose reduce side
+    is one task."""
+    from impala_spark.engine import ImpalaEngine
+
+    eng = ImpalaEngine(spark, sf_dir=SF_TINY)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    df = eng.sql(
+        "SELECT o_orderkey, o_totalprice FROM orders"
+        " WHERE o_totalprice > 1000 ORDER BY o_orderkey"
+    )
+    sc = spark.sparkContext
+    group = "test_engine_sql_tiny_order_by"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    keys = [r.o_orderkey for r in rows]
+    assert keys and keys == sorted(keys)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    result_stage = max(st.getJobInfo(jobs[0]).stageIds)
+    assert st.getStageInfo(result_stage).numTasks == 1
+
+
+def test_register_tables_sizes_shuffle_partitions(spark, monkeypatch):
+    """Above TINY_INPUT_BYTES the session gets DEFAULT_SHUFFLE_PARTITIONS
+    (no gated workload exercises that side, so it is pinned here)."""
+    from impala_spark import session as S
+
+    monkeypatch.setattr(S, "TINY_INPUT_BYTES", 0)
+    try:
+        register_tables(spark, SF_TINY)
+        assert (
+            spark.conf.get("spark.sql.shuffle.partitions")
+            == S.DEFAULT_SHUFFLE_PARTITIONS
+        )
+    finally:
+        monkeypatch.undo()
+        register_tables(spark, SF_TINY)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+
+
+def test_register_tables_leaves_pinned_clone_alone(spark):
+    par = posture_session(spark, SF_TINY, "parallel")
+    register_tables(par, SF_TINY)
+    assert par.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+def test_tiny_registration_does_not_narrow_a_pending_large_query(spark):
+    """Spark reads shuffle.partitions when a query RUNS: a DataFrame
+    built over a large input and collected after a tiny directory was
+    registered must still run with DEFAULT_SHUFFLE_PARTITIONS, not 1."""
+    from impala_spark import session as S
+
+    s = spark.newSession()  # own token: the shared session stays tiny
+    big_dir = SF_TINY + "/"  # same files, faked above TINY_INPUT_BYTES
+    S._DIR_BYTES[big_dir] = S.TINY_INPUT_BYTES + 1
+    try:
+        register_tables(s, big_dir)
+        big_df = s.table("orders").groupBy("o_orderstatus").count()
+        register_tables(s, SF_TINY)
+        assert (
+            s.conf.get("spark.sql.shuffle.partitions")
+            == S.DEFAULT_SHUFFLE_PARTITIONS
+        )
+        assert big_df.rdd.getNumPartitions() == int(S.DEFAULT_SHUFFLE_PARTITIONS)
+    finally:
         S._DIR_BYTES.pop(big_dir, None)
